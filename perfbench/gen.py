@@ -1,125 +1,88 @@
 """Seeded input generator for the benchmark.
 
-Writes the testdata tables the benchmark's workloads read (orders,
-customer and lineitem for the MFDB fixtures, documents for the dedup
-stream), one ``<table>.parquet`` file per table, with the same column
-names and physical types as the engine's testdata (see
-``mfdb_hafro_etl_spark.catalog.TESTDATA_DDL``). The same seed always
-gives byte-identical files; :func:`content_hash` is the check.
+The inputs are drawn from the engine's sf0.1 testdata tables, which
+the benchmark carries in ``perfbench/data/`` (only the columns the
+workloads read, zstd-compressed) so that it reads nothing outside its
+checkout. The seed picks a Bernoulli row sample: a share of the orders
+with every lineitem of each kept order (so the real key structure,
+such as duplicate ``(l_orderkey, l_linenumber)`` pairs, carries over),
+all customers, and a share of the documents. Values and distributions
+are the testdata's own; nothing is synthesised.
 
-Only numpy and pyarrow are used, so inputs are ready before the JVM
-starts and generation never depends on the engine under test.
+The same seed always gives byte-identical files; :func:`content_hash`
+is the check. Only numpy and pyarrow are used, so inputs are ready
+before the JVM starts and never depend on the engine under test.
+
+``perfbench/data/`` was written from the sf0.1 tables with
+
+    python3 perfbench/gen.py vendor <sf0.1 testdata directory>
 """
 
 from __future__ import annotations
 
 import hashlib
 import os
+import sys
 
 import numpy as np
 import pyarrow as pa
+import pyarrow.compute as pc
 import pyarrow.parquet as pq
 
-#: row counts per table: sf0.01 of the TPC-H shape (the workloads are
-#: bound by per-job fixed costs, not by rows)
-SIZES = {"customer": 1500, "orders": 15000, "lineitem": 60000, "documents": 1000}
-#: key ranges of the dimensions lineitem refers to but no workload reads
-N_PART, N_SUPPLIER = 2000, 200
+DATA_DIR = os.path.join(os.path.dirname(os.path.abspath(__file__)), "data")
 
-TABLES = tuple(SIZES)
+#: the columns of each sf0.1 table that the workloads (engine and
+#: oracles) read; None keeps them all
+COLUMNS = {
+    "customer": ["c_custkey"],
+    "orders": ["o_orderkey", "o_custkey", "o_orderdate", "o_totalprice"],
+    "lineitem": [
+        "l_orderkey", "l_partkey", "l_suppkey", "l_linenumber",
+        "l_quantity", "l_extendedprice", "l_shipdate",
+    ],
+    "documents": None,
+}
+TABLES = tuple(COLUMNS)
 
-VOCAB = (
-    "a agg batch big column customer data fast filter group hash join key line "
-    "merge order part query row scan slow small sort spark stream table the "
-    "value vector window"
-).split()
-
-_EPOCH_1995 = np.datetime64("1995-01-01", "D")
-_DAYS = int((np.datetime64("2001-08-01", "D") - _EPOCH_1995).astype(int))
-
-
-def _ts(days: np.ndarray) -> pa.Array:
-    return pa.array((_EPOCH_1995 + days.astype("timedelta64[D]")).astype("datetime64[us]"))
-
-
-def _write(out_dir: str, name: str, cols: dict[str, pa.Array]) -> None:
-    pq.write_table(
-        pa.table(cols), os.path.join(out_dir, f"{name}.parquet"), compression="snappy"
-    )
+#: share of the sf0.1 orders (with their lineitems) and documents a
+#: seed keeps
+ORDERS_FRACTION = 0.1
+DOCUMENTS_FRACTION = 0.3
 
 
-def _documents(rng: np.random.Generator, n: int) -> dict[str, pa.Array]:
-    """Random-word documents with planted exact duplicates, near
-    duplicates (one word changed, ``dup`` appended) and low-quality
-    repetitive documents, so the quality filter, exact dedup and
-    MinHash dedup each have work on every seed."""
-    vocab = np.array(VOCAB)
-    texts: list[str] = []
-    kind = rng.random(n)
-    for i in range(n):
-        if i >= 20 and kind[i] < 0.05:
-            texts.append(texts[int(rng.integers(0, i))])
-        elif i >= 20 and kind[i] < 0.15:
-            words = texts[int(rng.integers(0, i))].split()
-            words[int(rng.integers(0, len(words)))] = str(rng.choice(vocab))
-            texts.append(" ".join(words + ["dup"]))
-        elif kind[i] < 0.18:
-            w = str(rng.choice(vocab))
-            texts.append(" ".join([w] * int(rng.integers(10, 40))))
-        else:
-            texts.append(" ".join(rng.choice(vocab, int(rng.integers(10, 101)))))
-    langs = np.array(["en", "en", "en", "de", "fr", "es", "zh"])
-    return {
-        "doc_id": pa.array(np.arange(n, dtype=np.int64)),
-        "text": pa.array(texts),
-        "lang": pa.array(langs[rng.integers(0, len(langs), n)]),
-        "source": pa.array([f"src{s}" for s in rng.integers(0, 20, n)]),
-        "n_chars": pa.array(np.array([len(t) for t in texts], dtype=np.int64)),
-    }
+def vendor(src_dir: str, dst_dir: str = DATA_DIR) -> None:
+    """Copy the workloads' columns of the sf0.1 tables into ``dst_dir``."""
+    os.makedirs(dst_dir, exist_ok=True)
+    for t, cols in COLUMNS.items():
+        tab = pq.read_table(os.path.join(src_dir, f"{t}.parquet"), columns=cols)
+        pq.write_table(
+            tab.replace_schema_metadata(None), os.path.join(dst_dir, f"{t}.parquet"),
+            compression="zstd", compression_level=19,
+        )
+
+
+def _write(out_dir: str, name: str, tab: pa.Table) -> None:
+    pq.write_table(tab, os.path.join(out_dir, f"{name}.parquet"), compression="snappy")
+
+
+def _source(name: str) -> pa.Table:
+    return pq.read_table(os.path.join(DATA_DIR, f"{name}.parquet"))
 
 
 def generate(out_dir: str, seed: int) -> None:
     """Write every table for ``seed`` into ``out_dir``."""
     os.makedirs(out_dir, exist_ok=True)
     rng = np.random.default_rng(seed)
-    n = SIZES
-    segs = np.array(["AUTOMOBILE", "BUILDING", "FURNITURE", "HOUSEHOLD", "MACHINERY"])
-    _write(out_dir, "customer", {
-        "c_custkey": pa.array(np.arange(n["customer"], dtype=np.int64)),
-        "c_name": pa.array([f"Customer#{i:09d}" for i in range(n["customer"])]),
-        "c_nationkey": pa.array(rng.integers(0, 25, n["customer"]).astype(np.int32)),
-        "c_acctbal": pa.array(np.round(rng.uniform(-999.99, 9999.99, n["customer"]), 2)),
-        "c_mktsegment": pa.array(segs[rng.integers(0, 5, n["customer"])]),
-    })
-    no = n["orders"]
-    _write(out_dir, "orders", {
-        "o_orderkey": pa.array(np.arange(no, dtype=np.int64)),
-        "o_custkey": pa.array(rng.integers(0, n["customer"], no).astype(np.int64)),
-        "o_orderstatus": pa.array(np.array(["O", "F", "P"])[rng.integers(0, 3, no)]),
-        "o_totalprice": pa.array(np.round(rng.uniform(1000.0, 500000.0, no), 2)),
-        "o_orderdate": _ts(rng.integers(0, _DAYS + 1, no)),
-        "o_orderpriority": pa.array(
-            np.array(["1-URGENT", "2-HIGH", "3-MEDIUM", "4-NOT SPECIFIED", "5-LOW"])[
-                rng.integers(0, 5, no)
-            ]
-        ),
-    })
-    nl = n["lineitem"]
-    qty = rng.integers(1, 51, nl).astype(np.float64)
-    _write(out_dir, "lineitem", {
-        "l_orderkey": pa.array(rng.integers(0, no, nl).astype(np.int64)),
-        "l_partkey": pa.array(rng.integers(0, N_PART, nl).astype(np.int64)),
-        "l_suppkey": pa.array(rng.integers(0, N_SUPPLIER, nl).astype(np.int64)),
-        "l_linenumber": pa.array(rng.integers(1, 8, nl).astype(np.int32)),
-        "l_quantity": pa.array(qty),
-        "l_extendedprice": pa.array(np.round(rng.uniform(900.0, 105000.0, nl), 2)),
-        "l_discount": pa.array(rng.integers(0, 11, nl) / 100.0),
-        "l_tax": pa.array(rng.integers(0, 9, nl) / 100.0),
-        "l_returnflag": pa.array(np.array(["A", "N", "R"])[rng.integers(0, 3, nl)]),
-        "l_linestatus": pa.array(np.array(["O", "F"])[rng.integers(0, 2, nl)]),
-        "l_shipdate": _ts(rng.integers(1, _DAYS + 96, nl)),
-    })
-    _write(out_dir, "documents", _documents(rng, n["documents"]))
+    orders = _source("orders")
+    orders = orders.filter(pa.array(rng.random(orders.num_rows) < ORDERS_FRACTION))
+    lineitem = _source("lineitem")
+    lineitem = lineitem.filter(pc.is_in(lineitem.column("l_orderkey"), orders.column("o_orderkey")))
+    docs = _source("documents")
+    docs = docs.filter(pa.array(rng.random(docs.num_rows) < DOCUMENTS_FRACTION))
+    _write(out_dir, "customer", _source("customer"))
+    _write(out_dir, "orders", orders)
+    _write(out_dir, "lineitem", lineitem)
+    _write(out_dir, "documents", docs)
 
 
 def content_hash(out_dir: str) -> str:
@@ -136,3 +99,9 @@ def input_stats(out_dir: str, tables) -> dict:
     rows = sum(pq.ParquetFile(os.path.join(out_dir, f"{t}.parquet")).metadata.num_rows for t in tables)
     size = sum(os.path.getsize(os.path.join(out_dir, f"{t}.parquet")) for t in tables)
     return {"tables": list(tables), "rows": rows, "bytes": size}
+
+
+if __name__ == "__main__":
+    if len(sys.argv) != 3 or sys.argv[1] != "vendor":
+        sys.exit("usage: python3 perfbench/gen.py vendor <sf0.1 testdata directory>")
+    vendor(sys.argv[2])

@@ -378,6 +378,20 @@ def proc_tree_rss_mb(root_pid: int) -> float:
     return total / (1 << 20)
 
 
+def host_cpu() -> list[int]:
+    """The machine's cumulative CPU times from /proc/stat (user, nice,
+    system, idle, iowait, irq, softirq, steal, ...)."""
+    with open("/proc/stat") as fh:
+        return [int(x) for x in fh.readline().split()[1:]]
+
+
+def steal_share(before: list[int], after: list[int]) -> float:
+    """Share of CPU time the hypervisor took from this machine between
+    two :func:`host_cpu` readings."""
+    d = [b - a for a, b in zip(before, after)]
+    return d[7] / sum(d) if sum(d) else 0.0
+
+
 class RssSampler:
     """One thread sampling the process tree's RSS every ``period`` s."""
 

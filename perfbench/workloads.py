@@ -6,8 +6,9 @@ Each workload drives the engine only through its public functions
 oracle for the same inputs. A workload has three steps:
 
 - ``prepare`` (before the JVM starts): expected results from DuckDB;
-- ``register`` (inside each set-up): the inputs are opened through
-  ``catalog.load_table``;
+- ``register`` (inside the set-up): the inputs are opened through
+  ``catalog.load_table``; ``build_state`` then builds any standing
+  state the passes start from;
 - ``run_pass`` (timed): one complete pass, made of operations.
 
 Before every pass ``reset`` wipes the workload's sink, checkpoint and
@@ -24,7 +25,10 @@ import shutil
 import time
 import traceback
 
+import numpy as np
+import pandas as pd
 import pyarrow.parquet as pq
+from pandas.api.types import is_bool_dtype, is_numeric_dtype
 
 from mfdb_hafro_etl_spark import api, catalog, session, sinks
 from mfdb_hafro_etl_spark.streaming import jobs as streaming
@@ -59,10 +63,40 @@ def _close(a: str, b: str) -> bool:
     return places >= 2 and abs(x - y) <= 1.01 * 10.0 ** -places
 
 
+def _numeric(s) -> bool:
+    return is_numeric_dtype(s) and not is_bool_dtype(s)
+
+
+def _sorted_frame(df):
+    """``df`` with its columns by name, numbers as float64, every other
+    cell as its string (nulls as ``<N>``), rows sorted."""
+    df = df[sorted(df.columns)]
+    cols = {
+        c: df[c].astype("float64") if _numeric(df[c]) else df[c].map(_cell)
+        for c in df.columns
+    }
+    out = pd.DataFrame(cols)
+    return out.sort_values(list(out.columns), na_position="last", kind="mergesort").reset_index(drop=True)
+
+
 def same_rows(actual, expected) -> bool:
-    """Order-insensitive comparison of two pandas frames."""
+    """Order-insensitive comparison of two pandas frames: equal cells,
+    or numbers that agree to ten significant digits or by the
+    :func:`_close` rule."""
     if sorted(actual.columns) != sorted(expected.columns) or len(actual) != len(expected):
         return False
+    if all(_numeric(actual[c]) == _numeric(expected[c]) for c in actual.columns):
+        a, e = _sorted_frame(actual), _sorted_frame(expected)
+        for c in a.columns:
+            x, y = a[c].to_numpy(), e[c].to_numpy()
+            if _numeric(a[c]):
+                same = (x == y) | (np.isnan(x) & np.isnan(y)) | np.isclose(x, y, rtol=1e-10, atol=0.0)
+            else:
+                same = x == y
+            if not all(_close(_cell(x[i]), _cell(y[i])) for i in np.flatnonzero(~same)):
+                return False
+        return True
+    # mixed column types: compare cell strings row by row
     a, e = _rows(actual), _rows(expected)
     if a == e:
         return True
@@ -90,10 +124,10 @@ def dir_stats(path: str) -> tuple[int, int]:
 class Workload:
     name = ""
     tables: tuple[str, ...] = ()
-    #: fewest timed passes per run; metrics are medians over them
-    min_passes = 3
-    #: run_pass arguments that make it a single operation
-    warm_op: dict = {}
+    #: fewest timed passes per run; metrics are medians over them. Two
+    #: keep a run near a minute: host load, not the pass count, sets
+    #: the spread between runs
+    min_passes = 2
 
     def __init__(self, in_dir: str, work: str, seed: int, tracer) -> None:
         self.in_dir, self.work, self.seed, self.tracer = in_dir, work, seed, tracer
@@ -106,14 +140,17 @@ class Workload:
         for t in self.tables:
             catalog.load_table(spark, self.in_dir, t)
 
-    def on_session(self, spark) -> None:
-        """Called once per new session, before its warm-up."""
+    def build_state(self, spark) -> None:
+        """Build the standing state the passes start from (set-up work
+        of the workload's own layer, not of the catalog)."""
 
-    def warm_up(self, spark, con, full: bool) -> None:
-        """The set-up's warm-up: a whole pass (the first set-up, in a
-        cold JVM) or one operation (later set-ups)."""
+    def on_session(self, spark) -> None:
+        """Called once per session, before its warm-up."""
+
+    def warm_up(self, spark, con) -> None:
+        """The set-up's warm-up: one whole pass, unchecked."""
         self.reset(spark)
-        self.run_pass(spark, con, check=False, **({} if full else self.warm_op))
+        self.run_pass(spark, con, check=False)
 
     def reset(self, spark) -> int:
         """Wipe the sinks and release cached intermediates; return the
@@ -138,14 +175,17 @@ class Workload:
 
 #: (suite query, sink, FK gate) in the reference initdb.R order: the
 #: vessel taxonomy dimension, the stations spine, the ldist fact keyed
-#: on stations, the landings and the shrimp stations overlay. Each FK
-#: gate is (dimension, fact key columns); dimensions are the tables
-#: this pass imported before, read back through sinks.
+#: on stations, the landings, the landings rescaled to the published
+#: figures (its builder collects the published table eagerly) and the
+#: shrimp stations overlay. Each FK gate is (dimension, fact key
+#: columns); dimensions are the tables this pass imported before, read
+#: back through sinks.
 LOAD_ARMS = (
     ("p8_vessel_taxonomy", "vessels", None),
     ("p1_stations", "stations", ("vessels", ["vessel"])),
     ("p2_ldist", "ldist", ("stations", ["tow"])),
     ("p4_landings", "landings", ("species", ["species"])),
+    ("p6_landings_rescale", "landings_rescaled", ("species", ["species"])),
     ("p7_shrimp_overlay", "shrimp_stations", None),
 )
 
@@ -245,11 +285,9 @@ class MfdbLoad(Workload):
             df = getattr(api, q["kind"])(fact, q["group_by"], q["filters"])
         return self.tracer.collect(df)
 
-    warm_op = {"arms": LOAD_ARMS[:1], "readback": False}
-
-    def run_pass(self, spark, con, check: bool = True, arms=LOAD_ARMS, readback: bool = True) -> dict:
+    def run_pass(self, spark, con, check: bool = True) -> dict:
         lat, failed, t_pass = [], 0, 0.0
-        for query, sink, gate in arms:
+        for query, sink, gate in LOAD_ARMS:
             sec, out = self._op("import", lambda: self._import(spark, query, sink, gate))
             lat.append(sec)
             if isinstance(out, Exception):
@@ -258,7 +296,7 @@ class MfdbLoad(Workload):
                 got = read_sink(con, os.path.join(self.sink_dir, sink)).drop(columns=["data_source"])
                 failed += not same_rows(got, self.expected[query])
         self.written = dir_stats(self.sink_dir)
-        queries = list(zip(self.readback, self.readback_expected)) if readback else []
+        queries = list(zip(self.readback, self.readback_expected))
         for q, expected in queries:
             sec, out = self._op("query", lambda: self._query(spark, q))
             t_pass += sec
@@ -266,7 +304,7 @@ class MfdbLoad(Workload):
                 failed += 1
             elif check:
                 failed += not same_rows(out.to_pandas(), expected)
-        names = [q for q, _, _ in arms]
+        names = [q for q, _, _ in LOAD_ARMS]
         return {
             "pass_s": sum(lat) + t_pass, "ops": lat, "names": names,
             "queries": len(queries), "attempted": len(lat) + len(queries), "failed": failed,
@@ -290,9 +328,6 @@ class StreamIngest(Workload):
 
     name = "stream_ingest"
     tables = ("documents",)
-    #: two micro-batches per pass: four passes give eight op samples
-    min_passes = 4
-
     def prepare(self, con) -> None:
         self.expected = con.sql(ORACLES["x_stream_dedup_ingest"]).df()
         self.pristine = os.path.join(self.work, "index0")
@@ -308,9 +343,8 @@ class StreamIngest(Workload):
             pq.write_table(docs.filter(keep), path)
             os.utime(path, (1_000 + i, 1_000 + i))
 
-    def register(self, spark) -> None:
-        """Open the documents and build the standing LSH index over the
-        corpus slice: the stream's set-up work."""
+    def build_state(self, spark) -> None:
+        """Build the standing LSH index over the corpus slice."""
         from pyspark.sql import functions as F
 
         from mfdb_hafro_etl_spark.operators import dedup
@@ -326,12 +360,6 @@ class StreamIngest(Workload):
         left = super().reset(spark)
         shutil.copytree(self.pristine, self.idx)
         return left
-
-    def warm_up(self, spark, con, full: bool) -> None:
-        """A whole pass in a cold JVM; otherwise the index build in
-        register() is the set-up's warm-up operation."""
-        if full:
-            super().warm_up(spark, con, full)
 
     def _ingest(self, spark):
         stream = (
