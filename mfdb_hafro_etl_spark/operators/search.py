@@ -161,8 +161,9 @@ def tfidf_similar_pairs(
         f_ndocs = pool.submit(
             lambda: corpus.select(F.countDistinct(id_col)).first()[0]
         )
-        pool.submit(postings.count)
+        f_fill = pool.submit(postings.count)
         n_docs = f_ndocs.result()
+        f_fill.result()  # re-raises a failed fill
     weighted = (
         postings.withColumn(
             "df", F.count(F.lit(1)).over(Window.partitionBy("term"))

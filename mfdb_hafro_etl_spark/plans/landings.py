@@ -13,6 +13,7 @@ from pyspark.sql import functions as F
 from mfdb_hafro_etl_spark.exprcache import column_template
 from mfdb_hafro_etl_spark.functions.conditionals import nvl
 from mfdb_hafro_etl_spark.functions.domain import range_bucket, vessel_id
+from mfdb_hafro_etl_spark.localrel import local_df
 from mfdb_hafro_etl_spark.operators.grids import month_spread
 
 # rescale_by_published's driver-side collect bound: official
@@ -203,9 +204,13 @@ def rescale_by_published(
     # which keeps the published DAG to a single run (a DataFrame-side
     # conflict count would execute it twice: once for the check's
     # action, once inside the join — measured +1 s at x1 / +7 s at
-    # x100 on the scale fixture). The limit(N+1) cap ENFORCES the
-    # policy-size contract: a caller passing a fact-sized frame gets
-    # this loud refusal instead of a driver OOM.
+    # x100 on the scale fixture). The rebuilt side is a local_df
+    # LocalRelation (a LocalTableScan in the plan): createDataFrame
+    # on a Python list would make it a Python-backed RDD and start
+    # Python workers for every job that broadcasts it. The
+    # limit(N+1) cap ENFORCES the policy-size contract: a caller
+    # passing a fact-sized frame gets this loud refusal instead of a
+    # driver OOM.
     rows = pub.limit(MAX_PUBLISHED_ROWS + 1).collect()
     if len(rows) > MAX_PUBLISHED_ROWS:
         raise ValueError(
@@ -229,8 +234,10 @@ def rescale_by_published(
             f"{sorted(conflicts)[:3]}) — the rescale ratio is undefined; "
             "fix the published input"
         )
-    pub = published.sparkSession.createDataFrame(
-        [(s, y, v) for (s, y), v in sorted(seen.items())], pub.schema
+    pub = local_df(
+        published.sparkSession,
+        [(s, y, v) for (s, y), v in sorted(seen.items())],
+        pub.schema,
     )
     w = Window.partitionBy("species", "year")
     return (

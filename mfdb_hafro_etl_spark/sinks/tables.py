@@ -19,8 +19,14 @@ The reference has three kinds of write barrier (SURVEY §3):
   metadata swap of one partition, never a rewrite of the table, so
   at 100 TB an import touches only the new source's bytes.
   Taxonomy foreign keys must pre-exist (unknown vessels are
-  pre-registered in bulk, reference R/initdb.R:230-279) →
-  :func:`require_fk` is a broadcast anti-join gate.
+  pre-registered in bulk, reference R/initdb.R:230-279). Like the
+  reference's single server-side step, :func:`import_fact` checks the
+  keys INSIDE the write query: each taxonomy is a broadcast left join
+  against its deduplicated keys plus a ``raise_error`` predicate, so a
+  gated import is one Spark query and a violating one aborts the
+  write before anything is committed. :func:`require_fk` (a broadcast
+  anti-join) is the diagnostic: it runs only after a failed write, to
+  name the unregistered keys.
 """
 
 from __future__ import annotations
@@ -150,9 +156,11 @@ def require_fk(
     label: str = "dimension",
     sample: int = 5,
 ) -> DataFrame:
-    """Fail an import whose taxonomy values aren't registered —
-    mirrors mfdb's FK enforcement (SURVEY §1.3). Returns ``fact``
-    unchanged when clean."""
+    """Fail on taxonomy values that aren't registered — mirrors
+    mfdb's FK enforcement (SURVEY §1.3) as a standalone check that
+    names up to ``sample`` offending keys. Returns ``fact`` unchanged
+    when clean. :func:`import_fact` enforces the same rule inside its
+    write and calls this only to explain a failed write."""
     bad = fk_violations(fact, dim, keys)
     rows = bad.select(*keys).dropDuplicates(list(keys)).take(sample)
     if rows:
@@ -165,6 +173,33 @@ def require_fk(
     return fact
 
 
+def _fk_gated(
+    fact: DataFrame, taxonomies: dict[str, tuple[DataFrame, Sequence[str]]]
+) -> DataFrame:
+    """``fact`` with every taxonomy FK enforced inside its own plan:
+    per taxonomy, a broadcast left join against the deduplicated
+    dimension keys tagged with a marker column, then a predicate that
+    raises when all keys are non-NULL and the marker is NULL (no
+    match). The predicate reads both join sides, so it stays above
+    the join and sees every fact row; the final projection drops the
+    markers again."""
+    gated = fact
+    for i, (label, (dim, keys)) in enumerate(taxonomies.items()):
+        marker = f"__fk_{i}__"
+        registered = (
+            dim.select(*keys).dropDuplicates(list(keys)).withColumn(marker, F.lit(True))
+        )
+        unregistered = F.col(marker).isNull()
+        for k in keys:
+            unregistered = unregistered & F.col(k).isNotNull()
+        gated = gated.join(F.broadcast(registered), on=list(keys), how="left").filter(
+            F.when(
+                unregistered, F.raise_error(F.lit(f"unregistered {label} keys {list(keys)}"))
+            ).otherwise(F.lit(True))
+        )
+    return gated.select(*fact.columns)
+
+
 def import_fact(
     df: DataFrame,
     path: str,
@@ -172,12 +207,24 @@ def import_fact(
     *,
     taxonomies: dict[str, tuple[DataFrame, Sequence[str]]] | None = None,
 ) -> None:
-    """The full mfdb_import_survey analog: validate every taxonomy
-    FK, then replace-by-source. ``taxonomies`` maps a label to
-    (dimension DataFrame, fact key columns)."""
-    for label, (dim, keys) in (taxonomies or {}).items():
-        df = require_fk(df, dim, keys, label=label)
-    replace_by_source(df, path, data_source)
+    """The full mfdb_import_survey analog: replace-by-source with
+    every taxonomy FK checked in the same write query (see
+    :func:`_fk_gated`). ``taxonomies`` maps a label to (dimension
+    DataFrame, fact key columns).
+
+    A violating row fails the write; the dynamic partition overwrite
+    then aborts its staging directory, so nothing of the import is
+    committed. On any write failure the :func:`require_fk` diagnostic
+    re-runs per taxonomy to raise ``ValueError("unregistered …")``
+    with sample keys; when it finds none, the write's own error is
+    raised."""
+    taxonomies = taxonomies or {}
+    try:
+        replace_by_source(_fk_gated(df, taxonomies), path, data_source)
+    except Exception:
+        for label, (dim, keys) in taxonomies.items():
+            require_fk(df, dim, keys, label=label)
+        raise
 
 
 def table_file_stats(spark: SparkSession, path: str) -> list[tuple[str, int, int]]:

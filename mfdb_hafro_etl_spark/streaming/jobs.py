@@ -747,9 +747,14 @@ def dedup_ingest_handler(
                 # otherwise schedules 32-task md5/aggregate stages per
                 # trigger (measured −0.5 s/arm at sf0.1; at scale the
                 # state width reaches 2×parallelism and the fan-out is
-                # as wide as before)
-                band_width = int(
-                    spark.conf.get("spark.sql.shuffle.partitions")
+                # as wide as before). A non-numeric width (AQE's
+                # "auto" on some platforms) falls back to
+                # defaultParallelism.
+                width = spark.conf.get("spark.sql.shuffle.partitions")
+                band_width = (
+                    int(width)
+                    if width.isdigit()
+                    else spark.sparkContext.defaultParallelism
                 )
                 bands = lsh_band_table(
                     batch, id_col, text_col, n, k, rows_per_band,

@@ -432,6 +432,28 @@ def test_tfidf_max_df_gate_blocks_stop_terms(spark):
     assert srch.tfidf_similar_pairs(df, threshold=0.0, max_df=1).count() == 0
 
 
+def test_tfidf_postings_fill_error_propagates(spark, monkeypatch):
+    """The postings cache fill runs on a pool thread next to the doc
+    count; an error there must reach the caller, not be dropped with
+    the unread future."""
+    df = spark.createDataFrame(
+        [(1, "apple banana"), (2, "apple cherry")], "doc_id BIGINT, text STRING"
+    )
+    frame = type(df)  # the concrete (classic) DataFrame class
+    real_count = frame.count
+    calls = []
+
+    def count(self):
+        calls.append(self)
+        if len(calls) == 1:  # the postings fill is the first count()
+            raise RuntimeError("postings fill failed")
+        return real_count(self)
+
+    monkeypatch.setattr(frame, "count", count)
+    with pytest.raises(RuntimeError, match="postings fill failed"):
+        srch.tfidf_similar_pairs(df, threshold=0.3, max_df=10)
+
+
 # ------------------------------------------------------- k-means
 def test_kmeans_assign_moves_boundary_point(spark):
     # seeds are the 2 lowest ids: (0,[0,0... wait vectors must be non-zero

@@ -31,6 +31,15 @@ def test_stations_spine_is_broadcast_only(spark, sf_dir):
     assert _count(r"BroadcastHashJoin", plan) >= 3
 
 
+def test_rescale_published_side_is_local_table(spark, sf_dir):
+    """rescale_by_published rebuilds its collected published table as
+    a JVM LocalRelation: no Python-backed RDD scan, so executing the
+    rescale starts no Python workers."""
+    plan = _plan(QUERIES["p6_landings_rescale"](spark, sf_dir))
+    assert "Scan ExistingRDD" not in plan and "PythonRDD" not in plan, plan[:2000]
+    assert "LocalTableScan" in plan, plan[:2000]
+
+
 def test_count_scaling_is_single_partitioning(spark, sf_dir):
     """skala_med_toldum2 must run as window algebra over the ratio
     join's partitioning: exactly the two input exchanges, no

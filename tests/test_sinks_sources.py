@@ -11,6 +11,7 @@ from pyspark.sql import functions as F
 
 from mfdb_hafro_etl_spark.sinks import (
     fk_violations,
+    import_fact,
     materialize,
     read_fact,
     replace_by_source,
@@ -47,6 +48,133 @@ def test_replace_by_source_isolates_partitions(spark, tmp_path):
         (r.data_source, r.k, r.v) for r in read_fact(spark, path).collect()
     }
     assert got == {("a", 9, 90.0), ("b", 3, 30.0)}
+
+
+# ------------------------------------------------------- fused FK gate
+def _vessels(spark, *names):
+    return spark.createDataFrame([(v,) for v in names], "vessel STRING")
+
+
+def _fact_rows(spark, path):
+    return sorted(
+        (r.data_source, r.id, r.vessel) for r in read_fact(spark, path).collect()
+    )
+
+
+def _parquet_files(root):
+    return [
+        os.path.join(d, f)
+        for d, _, files in os.walk(root)
+        for f in files
+        if f.endswith(".parquet")
+    ]
+
+
+def test_import_fact_violation_raises_require_fk_error(spark, tmp_path):
+    """The fused gate fails the write; the caller gets require_fk's
+    own ValueError text, sample keys included."""
+    fact = spark.createDataFrame(
+        [(1, "V1"), (2, "V9"), (3, "V8"), (4, "V9")], "id INT, vessel STRING"
+    )
+    dim = _vessels(spark, "V1")
+    with pytest.raises(ValueError) as want:
+        require_fk(fact, dim, ["vessel"], label="vessel")
+    with pytest.raises(ValueError) as got:
+        import_fact(
+            fact, str(tmp_path / "fact"), "s", taxonomies={"vessel": (dim, ["vessel"])}
+        )
+    assert str(got.value) == str(want.value)
+    assert "V9" in str(got.value) and "V8" in str(got.value)
+
+
+def test_import_fact_violation_keeps_every_source(spark, tmp_path):
+    """A rejected re-import commits nothing: the rows already imported
+    for that source and for every other source stay as they were."""
+    path = str(tmp_path / "fact")
+    dim = _vessels(spark, "V1", "V2")
+    tax = {"vessel": (dim, ["vessel"])}
+    schema = "id INT, vessel STRING"
+    import_fact(spark.createDataFrame([(1, "V1")], schema), path, "a", taxonomies=tax)
+    import_fact(spark.createDataFrame([(2, "V2")], schema), path, "b", taxonomies=tax)
+    before = _fact_rows(spark, path)
+    bad = spark.createDataFrame([(3, "V1"), (4, "V9")], schema)
+    with pytest.raises(ValueError, match="unregistered vessel"):
+        import_fact(bad, path, "a", taxonomies=tax)
+    assert _fact_rows(spark, path) == before == [("a", 1, "V1"), ("b", 2, "V2")]
+
+
+def test_import_fact_violation_into_missing_path_writes_nothing(spark, tmp_path):
+    path = tmp_path / "fact"
+    fact = spark.createDataFrame([(1, "V9")], "id INT, vessel STRING")
+    with pytest.raises(ValueError, match="unregistered"):
+        import_fact(
+            fact, str(path), "s", taxonomies={"vessel": (_vessels(spark, "V1"), ["vessel"])}
+        )
+    assert _parquet_files(path) == []
+
+
+def test_import_fact_null_keys_pass(spark, tmp_path):
+    """NULL keys are not violations (the reference imports NULL
+    vessel rows), for single and composite keys alike."""
+    path = str(tmp_path / "fact")
+    fact = spark.createDataFrame(
+        [(1, "V1", 1), (2, None, 1), (3, "V9", None), (4, None, None)],
+        "id INT, vessel STRING, gear INT",
+    )
+    dim = spark.createDataFrame([("V1", 1)], "vessel STRING, gear INT")
+    import_fact(fact, path, "s", taxonomies={"vg": (dim, ["vessel", "gear"])})
+    got = sorted((r.id, r.vessel, r.gear) for r in read_fact(spark, path).collect())
+    assert got == [(1, "V1", 1), (2, None, 1), (3, "V9", None), (4, None, None)]
+
+
+def test_import_fact_duplicate_dim_keys_do_not_fan_out(spark, tmp_path):
+    path = str(tmp_path / "fact")
+    fact = spark.createDataFrame([(1, "V1"), (2, "V1"), (3, "V2")], "id INT, vessel STRING")
+    dim = _vessels(spark, "V1", "V1", "V1", "V2", "V2")
+    import_fact(fact, path, "s", taxonomies={"vessel": (dim, ["vessel"])})
+    assert _fact_rows(spark, path) == [("s", 1, "V1"), ("s", 2, "V1"), ("s", 3, "V2")]
+    assert read_fact(spark, path).columns == ["id", "vessel", "data_source"]
+
+
+def test_import_fact_enforces_every_taxonomy(spark, tmp_path):
+    """Two taxonomies on one import: a violation of either one fails
+    the import, each with its own label."""
+    path = str(tmp_path / "fact")
+    schema = "id INT, vessel STRING, species STRING"
+    tax = {
+        "vessel": (_vessels(spark, "V1"), ["vessel"]),
+        "species": (spark.createDataFrame([("COD",)], "species STRING"), ["species"]),
+    }
+    with pytest.raises(ValueError, match=r"unregistered vessel keys \['vessel'\]: \('V9',\)"):
+        import_fact(
+            spark.createDataFrame([(1, "V9", "COD")], schema), path, "s", taxonomies=tax
+        )
+    with pytest.raises(ValueError, match=r"unregistered species keys \['species'\]: \('HAD',\)"):
+        import_fact(
+            spark.createDataFrame([(1, "V1", "HAD")], schema), path, "s", taxonomies=tax
+        )
+    assert _parquet_files(path) == []
+    import_fact(spark.createDataFrame([(1, "V1", "COD")], schema), path, "s", taxonomies=tax)
+    assert [tuple(r) for r in read_fact(spark, path).collect()] == [(1, "V1", "COD", "s")]
+
+
+def test_import_fact_clean_runs_only_the_write(spark, tmp_path, monkeypatch):
+    """A clean gated import is one query: neither the require_fk
+    diagnostic nor any take() runs besides the write itself."""
+    from mfdb_hafro_etl_spark.sinks import tables
+
+    def fail(*a, **k):
+        raise AssertionError("a clean import ran an action besides the write")
+
+    path = str(tmp_path / "fact")
+    fact = spark.createDataFrame([(1, "V1"), (2, None)], "id INT, vessel STRING")
+    dim = _vessels(spark, "V1")
+    monkeypatch.setattr(tables, "require_fk", fail)
+    for action in ("take", "collect", "count", "first", "head", "isEmpty"):
+        monkeypatch.setattr(type(fact), action, fail)  # the concrete class
+    import_fact(fact, path, "s", taxonomies={"vessel": (dim, ["vessel"])})
+    monkeypatch.undo()
+    assert _fact_rows(spark, path) == [("s", 1, "V1"), ("s", 2, None)]
 
 
 def test_materialize_roundtrip_with_clustering(spark, tmp_path):

@@ -487,6 +487,35 @@ def test_dedup_ingest_handler_marker_short_circuits(spark, tmp_path):
     assert spark.read.parquet(os.path.join(index, "exact")).count() == n_exact
 
 
+def test_dedup_ingest_handler_auto_shuffle_partitions(spark, tmp_path, monkeypatch):
+    """Platforms with AQE auto-sizing report spark.sql.shuffle.partitions
+    as "auto" (open-source Spark refuses to set it, so the conf read is
+    patched): the handler sizes its band fan-out from
+    defaultParallelism instead of failing the batch."""
+    from pyspark.sql.conf import RuntimeConfig
+
+    from mfdb_hafro_etl_spark.streaming.jobs import dedup_ingest_handler
+
+    index = _build_index(spark, tmp_path)
+    vdir = str(tmp_path / "v")
+    real_get = RuntimeConfig.get
+
+    def get(self, key, *default):
+        if key == "spark.sql.shuffle.partitions":
+            return "auto"
+        return real_get(self, key, *default)
+
+    monkeypatch.setattr(RuntimeConfig, "get", get)
+    dedup_ingest_handler(index, vdir, "doc_id", "text")(_docs_df(spark, _B1), 0)
+    monkeypatch.undo()
+    got = {
+        (r["doc_id"], r["dup_kind"], r["match_id"])
+        for r in spark.read.parquet(os.path.join(vdir, "batch_id=0")).collect()
+    }
+    assert got == {(10, "exact", 1), (12, "exact", 11)}
+    assert os.path.exists(os.path.join(vdir, "_commits", "0"))
+
+
 def test_dedup_ingest_crash_window_redelivery_is_idempotent(spark, tmp_path):
     """Simulate a crash AFTER the index append + verdict write but
     BEFORE the marker: redelivering the batch must reproduce the
