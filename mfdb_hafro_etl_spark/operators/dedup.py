@@ -80,13 +80,14 @@ def shingles(col: Column | str, n: int = 3) -> Column:
     transform/slice lambda over a sequence(). Equivalent output
     (property-pinned against the lambda construction in
     tests/test_corpus_property.py), but measured ~4x faster on the
-    shingle explode AND stable run-to-run: every higher-order
-    function in a plan mints fresh lambda-variable names, so the
-    generated code never hits the codegen class cache and each query
-    re-runs cold (janino compile + interpreted warmup on the
-    md5-heavy hot path). `[^ ]*` (not `\\S+`) reproduces split(' ')
-    token semantics exactly — consecutive spaces yield empty tokens
-    in both constructions."""
+    shingle explode and stable run-to-run, and one regexp call is a
+    handful of py4j round-trips to build where the lambda tree costs
+    one per operator. (Fresh lambda-variable names do NOT defeat the
+    JVM codegen class cache: a reused and a rebuilt higher-order-
+    function tree compile the same number of new classes, measured
+    with Spark's CodegenMetrics.) `[^ ]*` (not `\\S+`) reproduces
+    split(' ') token semantics exactly — consecutive spaces yield
+    empty tokens in both constructions."""
     # string-name dispatch FIRST: building body/pat before it was dead
     # work on every memo hit (r12 ADVICE low)
     if isinstance(col, str):
@@ -1116,7 +1117,6 @@ def lsh_index_write(
     _mode: str = "overwrite",
     _bands: DataFrame | None = None,
     _exact: DataFrame | None = None,
-    _parallel: bool = False,
 ) -> None:
     """Materialize the corpus-side dedup index ONCE: the MinHash band
     table (``path``/bands, parquet partitioned by band) and the exact
@@ -1181,23 +1181,18 @@ def lsh_index_write(
     def _write_exact() -> None:
         exact.write.mode(_mode).parquet(os.path.join(path, "exact"))
 
-    if _parallel:
-        # the two subtables are independent: submit both write jobs
-        # concurrently (Spark supports concurrent actions on one
-        # session; the scheduler interleaves their tasks). The meta
-        # write below still happens strictly AFTER both commit, so
-        # the fail-loud half-built-index guarantee is unchanged.
-        # Worth ~1 write latency per increment on the streaming
-        # ingest's micro-batch path.
-        from concurrent.futures import ThreadPoolExecutor
+    # the two subtables are independent: submit both write jobs
+    # concurrently (Spark supports concurrent actions on one session;
+    # the scheduler interleaves their tasks). The meta write below
+    # still happens strictly AFTER both commit, so the fail-loud
+    # half-built-index guarantee is unchanged. Worth ~1 write latency
+    # per build or increment.
+    from concurrent.futures import ThreadPoolExecutor
 
-        with ThreadPoolExecutor(max_workers=2) as pool:
-            fb, fe = pool.submit(_write_bands), pool.submit(_write_exact)
-            fb.result()
-            fe.result()
-    else:
-        _write_bands()
-        _write_exact()
+    with ThreadPoolExecutor(max_workers=2) as pool:
+        fb, fe = pool.submit(_write_bands), pool.submit(_write_exact)
+        fb.result()
+        fe.result()
     if _mode == "overwrite":
         # meta is written LAST so a probe never validates against a
         # half-built index (missing meta fails loudly instead)
@@ -1214,7 +1209,6 @@ def lsh_index_append(
     rows_per_band: int = 2,
     _bands: DataFrame | None = None,
     _exact: DataFrame | None = None,
-    _parallel: bool = False,
 ) -> None:
     """Append one increment to a materialized dedup index (see
     lsh_index_write): computes the increment's band + exact rows and
@@ -1237,7 +1231,6 @@ def lsh_index_append(
         _mode="append",
         _bands=_bands,
         _exact=_exact,
-        _parallel=_parallel,
     )
 
 

@@ -676,6 +676,72 @@ def _ivf_read_marker(path: str) -> dict:
         return json.load(fh)
 
 
+def _ivf_admit(
+    batch: DataFrame,
+    path: str,
+    meta: dict,
+    appended_so_far: int,
+    vec_col: str,
+    max_appended_frac: float,
+    label: str,
+) -> int:
+    """The one admission check for appending ``batch`` to the IVF index
+    at ``path`` — shared by ivf_index_append and
+    streaming.jobs.ivf_ingest_handler, which differ only in where
+    ``appended_so_far`` (rows appended since the build) comes from.
+    Refuses loudly when the meta lacks the append anchors, when ANY
+    vector is NULL or has the wrong dimension (every row is checked:
+    one bad row would otherwise fail opaquely inside the assignment
+    kernel), or when the batch would push the appended rows past the
+    recluster budget. ``label`` names the batch in the errors. Returns
+    the batch's row count; 0 means there is nothing to append."""
+    if "rows_at_build" not in meta or "dims" not in meta:
+        raise ValueError(
+            f"IVF index at {path} was built by an older layout without "
+            "append anchors (rows_at_build/dims) — the drift and shape "
+            "guards cannot run, so appends would silently degrade recall. "
+            "Rebuild once with build_ivf_index(..., rebuild=True)."
+        )
+    # ONE aggregation job answers row count AND the dim probe over every
+    # row. size(NULL) is -1 under legacy sizeOfNull and NULL under ANSI,
+    # and min() skips SQL NULLs; the explicit null count covers both.
+    stats = batch.agg(
+        F.count(F.lit(1)).alias("n"),
+        F.min(F.size(F.col(vec_col))).alias("dmin"),
+        F.max(F.size(F.col(vec_col))).alias("dmax"),
+        F.sum(F.col(vec_col).isNull().cast("int")).alias("nnull"),
+    ).collect()[0]
+    n_rows = int(stats["n"])
+    if not n_rows:
+        return 0
+    dmin, dmax = stats["dmin"], stats["dmax"]
+    if int(stats["nnull"] or 0) > 0 or dmin is None or int(dmin) < 0:
+        raise ValueError(
+            f"{label}: a {vec_col} is NULL — IVF assignment is undefined "
+            "for NULL vectors; filter them out upstream"
+        )
+    dims = int(meta["dims"])
+    if dims and (int(dmin) != dims or int(dmax) != dims):
+        raise ValueError(
+            f"IVF index at {path} holds {dims}-dim vectors; {label} has "
+            f"{dmin}..{dmax}-dim vectors — assigning them to these "
+            "centroids is meaningless. Build a separate index."
+        )
+    rows_at_build = int(meta["rows_at_build"])
+    appended_after = appended_so_far + n_rows
+    if rows_at_build and appended_after > max_appended_frac * rows_at_build:
+        raise ValueError(
+            f"IVF index at {path}: {label} of {n_rows} rows would put "
+            f"{appended_after} appended rows over the recluster budget "
+            f"({max_appended_frac:.0%} of {rows_at_build} built rows). "
+            "Appended vectors are quantized by STALE centroids and recall "
+            "degrades silently — rebuild with build_ivf_index(..., "
+            "rebuild=True) (and restart any ingest stream), or raise "
+            "max_appended_frac deliberately."
+        )
+    return n_rows
+
+
 def ivf_index_append(
     batch: DataFrame,
     path: str,
@@ -707,8 +773,9 @@ def ivf_index_append(
     centroids over the full corpus and resets the budget. Pass a
     bigger fraction to loosen deliberately; there is no warn-and-
     proceed mode, because a warning in a scheduled pipeline's log is
-    the same as silence. Parameter/shape mismatches (vector dims vs
-    the index's) also refuse loudly.
+    the same as silence. Shape mismatches (any vector whose dims
+    differ from the index's) and NULL vectors also refuse loudly
+    (_ivf_admit, shared with the streaming ingest handler).
 
     Run ivf_index_compact periodically: every append adds ≥1 file
     per touched cell, and thousand-increment indexes pay per-file
@@ -717,42 +784,14 @@ def ivf_index_append(
 
     spark = batch.sparkSession
     meta = _ivf_read_marker(path)
-    if "rows_at_build" not in meta or "dims" not in meta:
-        raise ValueError(
-            f"IVF index at {path} was built by an older layout without "
-            "append anchors (rows_at_build/dims) — the drift and shape "
-            "guards cannot run, so appends would silently degrade recall. "
-            "Rebuild once with build_ivf_index(..., rebuild=True)."
-        )
-    first = batch.select(F.size(F.col(vec_col)).alias("d")).limit(1).collect()
-    if not first:
-        return  # empty increment: a blind append of nothing is a no-op
-    if first[0]["d"] is None:
-        raise ValueError(
-            f"append batch's first {vec_col} is NULL — IVF assignment is "
-            "undefined for NULL vectors; filter them out upstream"
-        )
-    dims = int(first[0]["d"])
-    if meta.get("dims") and dims != meta["dims"]:
-        raise ValueError(
-            f"IVF index at {path} holds {meta['dims']}-dim vectors; "
-            f"append batch has {dims}-dim vectors — assigning them to "
-            "these centroids is meaningless. Build a separate index."
-        )
     vectors = os.path.join(path, "vectors")
-    rows_at_build = int(meta.get("rows_at_build", 0))
-    current = spark.read.parquet(vectors).count()
-    batch_rows = batch.count()
-    appended_after = current + batch_rows - rows_at_build
-    if rows_at_build and appended_after > max_appended_frac * rows_at_build:
-        raise ValueError(
-            f"IVF index at {path}: appending {batch_rows} rows would put "
-            f"{appended_after} appended rows over the recluster budget "
-            f"({max_appended_frac:.0%} of {rows_at_build} built rows). "
-            "Appended vectors are quantized by STALE centroids and recall "
-            "degrades silently — rebuild with build_ivf_index(..., "
-            "rebuild=True), or raise max_appended_frac deliberately."
-        )
+    appended = spark.read.parquet(vectors).count() - int(
+        meta.get("rows_at_build", 0)
+    )
+    if not _ivf_admit(
+        batch, path, meta, appended, vec_col, max_appended_frac, "append batch"
+    ):
+        return  # empty increment: a blind append of nothing is a no-op
     cents = [
         (int(r[0]), [float(x) for x in r[1]])
         for r in spark.read.parquet(os.path.join(path, "centroids")).collect()

@@ -18,6 +18,41 @@ import os
 from pyspark.sql import SparkSession
 
 
+# Runtime-settable SQL confs, applied by get_spark at build time and by
+# tune_session to an externally-created session — one value per key.
+_RUNTIME_SQL_CONFS = {
+    "spark.sql.session.timeZone": "UTC",
+    "spark.sql.adaptive.enabled": "true",
+    "spark.sql.sources.partitionOverwriteMode": "dynamic",
+    # 64 MB broadcast ceiling (vs the 10 MB default): sized to the
+    # 128 GiB executors this engine targets. The decision stays
+    # RUNTIME size-based — AQE broadcasts a join side only when its
+    # actual size fits, so fact-fact joins still sort-merge at
+    # scale while mid-sized dimensions (the stations spine at test
+    # SF) skip the shuffle entirely.
+    "spark.sql.autoBroadcastJoinThreshold": str(64 * 1024 * 1024),
+    # AQE coalescing's PARALLELISM FLOOR (default 1m): the
+    # coalescer targets max(minPartitionSize,
+    # shuffleBytes/parallelism), so on a sub-32 MB shuffle the 1m
+    # floor coalesces every post-shuffle stage down to 1-3 tasks —
+    # starvation for this engine's CPU-dense operators (KN scoring,
+    # per-gram hashing: 10^2-10^4 x scan CPU per byte; r12
+    # measurement: the lm3 scoring stage ran as ONE 8.5 s task on
+    # 1 of 32 cores). 64k keeps the SAME formula scale-adaptive:
+    # at cluster scale shuffleBytes/parallelism dominates and the
+    # setting is inert; below it, Spark's own parallelism-first
+    # rule is allowed to actually reach defaultParallelism.
+    # Measured on the full 141-arm sf0.1 suite: this setting alone is
+    # the win (20-arm A/B/C/D subset: 57.7 s with only this vs
+    # 63.8 s default); lowering files.openCostInBytes alongside it
+    # was tried and REJECTED — splitting small multi-file scratch
+    # tables into per-file tasks cost more in per-task overhead
+    # than the parallelism returned (67-69 s on the same subset,
+    # +12 s on the full suite).
+    "spark.sql.adaptive.coalescePartitions.minPartitionSize": "64k",
+}
+
+
 def get_spark(
     app_name: str = "mfdb-hafro-etl-spark",
     cpus: str | int | None = None,
@@ -33,43 +68,9 @@ def get_spark(
         SparkSession.builder.appName(app_name)
         .master(f"local[{cpus}]")
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
-        .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        # 64 MB broadcast ceiling (vs the 10 MB default): sized to the
-        # 128 GiB executors this engine targets. The decision stays
-        # RUNTIME size-based — AQE broadcasts a join side only when its
-        # actual size fits, so fact-fact joins still sort-merge at
-        # scale while mid-sized dimensions (the stations spine at test
-        # SF) skip the shuffle entirely.
-        .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
-        # AQE coalescing's PARALLELISM FLOOR (default 1m): the
-        # coalescer targets max(minPartitionSize,
-        # shuffleBytes/parallelism), so on a sub-32 MB shuffle the 1m
-        # floor coalesces every post-shuffle stage down to 1-3 tasks —
-        # starvation for this engine's CPU-dense operators (KN scoring,
-        # per-gram hashing: 10^2-10^4 x scan CPU per byte; r12
-        # measurement: the lm3 scoring stage ran as ONE 8.5 s task on
-        # 1 of 32 cores). 64k keeps the SAME formula scale-adaptive:
-        # at cluster scale shuffleBytes/parallelism dominates and the
-        # setting is inert; below it, Spark's own parallelism-first
-        # rule is allowed to actually reach defaultParallelism.
-        # Measured on the full 141-arm sf0.1 suite: this knob alone is
-        # the win (20-arm A/B/C/D subset: 57.7 s with only this vs
-        # 63.8 s default); lowering files.openCostInBytes alongside it
-        # was tried and REJECTED — splitting small multi-file scratch
-        # tables into per-file tasks cost more in per-task overhead
-        # than the parallelism returned (67-69 s on the same subset,
-        # +12 s on the full suite).
-        # Env-overridable: production clusters can pin any value — the
-        # formula above makes the local default a no-op there.
-        .config(
-            "spark.sql.adaptive.coalescePartitions.minPartitionSize",
-            os.environ.get("SPARK_GRAFT_MIN_PARTITION_SIZE", "64k"),
-        )
-        .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.sql.sources.partitionOverwriteMode", "dynamic")
         # the local[32] JVM is driver AND all 32 executor threads in
         # one heap. Round 2 raised this to 32g to mask checkpoint-leak
         # degradation; with the leaks fixed at source (iterative ops
@@ -111,25 +112,19 @@ def get_spark(
         # warehouse out of the repo tree
         .config("spark.sql.warehouse.dir", "/tmp/mfdb_suite/warehouse")
     )
+    for key, value in _RUNTIME_SQL_CONFS.items():
+        builder = builder.config(key, value)
     return builder.getOrCreate()
 
 
 def tune_session(spark: SparkSession) -> SparkSession:
     """Apply runtime-settable engine settings to an externally-created
     session (the driver passes us its own SparkSession)."""
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    try:
-        spark.conf.set("spark.sql.adaptive.enabled", "true")
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
-        # AQE parallelism-floor knob (see get_spark for the rationale
-        # and the scale story); runtime-settable SQL conf
-        spark.conf.set(
-            "spark.sql.adaptive.coalescePartitions.minPartitionSize",
-            os.environ.get("SPARK_GRAFT_MIN_PARTITION_SIZE", "64k"),
-        )
-    except Exception:
-        pass  # static confs on some builds; harmless
+    for key, value in _RUNTIME_SQL_CONFS.items():
+        try:
+            spark.conf.set(key, value)
+        except Exception:
+            pass  # static confs on some builds; harmless
     ensure_package_shipped(spark)
     return spark
 

@@ -913,7 +913,6 @@ def dedup_ingest_handler(
                             _exact=b_hash.join(
                                 flagged, on=id_col, how="left_anti"
                             ).select("h", F.col(id_col).alias("cid")),
-                            _parallel=True,
                         )
 
                     def _write_verdicts() -> None:
@@ -1024,6 +1023,46 @@ def stream_dedup_ingest(
     return _read_batched_sink(spark, verdict_dir, schema)
 
 
+def _ivf_committed_rows(index_path: str, meta: dict, commits_dir: str) -> int:
+    """Rows appended under the index's CURRENT build, summed from the
+    ingest commit markers (markers of earlier builds stop counting).
+    Refuses loudly — malformed on-disk state never degrades silently —
+    when the meta carries no build_id or a marker is not a JSON object:
+    either makes the sum, and so the recluster budget, unknowable."""
+    import json
+
+    fix = (
+        "rebuild the index with build_ivf_index(..., rebuild=True) and "
+        "restart the stream on a fresh log/checkpoint directory"
+    )
+    build_id = meta.get("build_id")
+    if build_id is None:
+        raise ValueError(
+            f"IVF index meta {os.path.join(index_path, '_INDEX_OK')} has "
+            f"no build_id, so the ingest commit log cannot account for "
+            f"appended rows — {fix}."
+        )
+    committed = 0
+    names = os.listdir(commits_dir) if os.path.isdir(commits_dir) else []
+    for name in names:
+        if name.endswith(".tmp"):
+            continue
+        mpath = os.path.join(commits_dir, name)
+        try:
+            with open(mpath) as fh:
+                rec = json.load(fh)
+        except ValueError:
+            rec = None
+        if not isinstance(rec, dict):
+            raise ValueError(
+                f"IVF ingest commit marker {mpath} is not a JSON object, "
+                f"so its appended-row count is unknowable — {fix}."
+            )
+        if rec.get("build_id") == build_id:
+            committed += int(rec.get("n_appended", 0))
+    return committed
+
+
 def ivf_ingest_handler(
     index_path: str,
     log_dir: str,
@@ -1064,20 +1103,22 @@ def ivf_ingest_handler(
     so they must NOT count), markers from before a rebuild carry a
     stale build_id and stop counting automatically, and availableNow
     replays batches in order so every batch < N is marker-committed
-    when batch N is admitted. Legacy indexes (no build_id) and legacy
-    markers (pre-r10 "ok" bodies) fall back to the table-count path
-    once, loudly correct rather than silently wrong. When the budget
-    would be exceeded the handler RAISES — failing the stream loudly
-    mid-run — because appended vectors are quantized by stale
-    centroids and recall degrades silently past the budget (the r8
-    no-warn-and-proceed discipline). Rebuild with
-    build_ivf_index(..., rebuild=True), which resets the budget (new
-    build_id), then restart the stream."""
-    import glob
+    when batch N is admitted. An index meta without a build_id, or a
+    commit marker that is not a JSON object, makes that sum unknowable:
+    the handler refuses (_ivf_committed_rows) rather than guess. The
+    batch itself passes the same admission check as ivf_index_append
+    (similarity._ivf_admit: NULL and dimension refusals over every row,
+    then the budget). When the budget would be exceeded the handler
+    RAISES — failing the stream loudly mid-run — because appended
+    vectors are quantized by stale centroids and recall degrades
+    silently past the budget (the r8 no-warn-and-proceed discipline).
+    Rebuild with build_ivf_index(..., rebuild=True), which resets the
+    budget (new build_id), then restart the stream."""
     import json
     import shutil
 
     from mfdb_hafro_etl_spark.operators.similarity import (
+        _ivf_admit,
         _ivf_assign_table,
         _ivf_read_marker,
     )
@@ -1088,14 +1129,15 @@ def ivf_ingest_handler(
     # stream's micro-batches is semantically free and removes one
     # read+collect job per batch (guide §5: fewer driver actions).
     # Keyed by build_id: a mid-stream rebuild (new build_id in the
-    # re-read meta) misses the memo and re-collects; legacy indexes
-    # without a build_id never memoize. Scoped to this handler
-    # closure — one stream run — so nothing persists across runs.
+    # re-read meta) misses the memo and re-collects. Scoped to this
+    # handler closure — one stream run — so nothing persists across
+    # runs.
     cents_memo: dict[str, list] = {}
 
     def handle(batch_df: DataFrame, batch_id: int) -> None:
         spark = batch_df.sparkSession
-        marker = os.path.join(log_dir, "_commits", str(batch_id))
+        commits_dir = os.path.join(log_dir, "_commits")
+        marker = os.path.join(commits_dir, str(batch_id))
         # compaction mutual exclusion (r9 verdict #5): the exactly-once
         # proof relies on this batch's deterministic ivfb_b<id>.parquet
         # names SURVIVING until the commit marker exists — if
@@ -1117,112 +1159,26 @@ def ivf_ingest_handler(
                 pass
             return
         meta = _ivf_read_marker(index_path)  # loud on a torn index
-        if "rows_at_build" not in meta or "dims" not in meta:
-            raise ValueError(
-                f"IVF index at {index_path} lacks append anchors "
-                "(rows_at_build/dims) — rebuild with "
-                "build_ivf_index(..., rebuild=True) before streaming into it."
-            )
+        committed = _ivf_committed_rows(index_path, meta, commits_dir)
+        build_id = meta["build_id"]
         batch = batch_df.persist()
         try:
-            # ONE aggregation job answers row count AND the dim probe
-            # (was count + limit(1).collect — two serialized jobs per
-            # micro-batch on the same persisted batch; guide §5). The
-            # batch's persist fills during this job, so the staging
-            # write below reads cache. size(NULL array) is -1 under
-            # Spark's default legacy sizeOfNull, and min() skips SQL
-            # NULLs, so dmin == -1 ⇔ some vector is NULL.
-            stats = batch.agg(
-                F.count(F.lit(1)).alias("n"),
-                F.min(F.size(F.col(vec_col))).alias("dmin"),
-                F.max(F.size(F.col(vec_col))).alias("dmax"),
-                F.sum(F.col(vec_col).isNull().cast("int")).alias("nnull"),
-            ).collect()[0]
-            n_rows = int(stats["n"])
+            # the admission aggregate fills the batch's persist, so the
+            # staging write below reads cache
+            n_rows = _ivf_admit(
+                batch,
+                index_path,
+                meta,
+                committed,
+                vec_col,
+                max_appended_frac,
+                f"stream batch {batch_id}",
+            )
             n_cells = 0
             if n_rows:
-                dmin, dmax = stats["dmin"], stats["dmax"]
-                # size(NULL) is -1 under legacy sizeOfNull and NULL
-                # under ANSI; the explicit null count covers both (and
-                # catches a mixed batch the old first-row probe passed
-                # through to an opaque numpy failure)
-                if int(stats["nnull"] or 0) > 0 or dmin is None or int(dmin) < 0:
-                    raise ValueError(
-                        f"stream batch {batch_id}: a {vec_col} is NULL — "
-                        "IVF assignment is undefined; filter upstream"
-                    )
-                if meta.get("dims") and (
-                    int(dmin) != int(meta["dims"]) or int(dmax) != int(meta["dims"])
-                ):
-                    raise ValueError(
-                        f"IVF index at {index_path} holds {meta['dims']}-dim "
-                        f"vectors; stream batch {batch_id} has "
-                        f"{dmin}..{dmax}-dim vectors."
-                    )
                 token = f"b{batch_id}"
                 vectors = os.path.join(index_path, "vectors")
-                rows_at_build = int(meta["rows_at_build"])
-                build_id = meta.get("build_id")
-                commits_dir = os.path.join(log_dir, "_commits")
-                committed = 0
-                legacy = build_id is None
-                if not legacy and os.path.isdir(commits_dir):
-                    for mname in os.listdir(commits_dir):
-                        if mname.endswith(".tmp"):
-                            continue
-                        try:
-                            with open(os.path.join(commits_dir, mname)) as fh:
-                                rec = json.loads(fh.read())
-                        except (OSError, ValueError):
-                            # pre-r10 "ok" marker: its appended count is
-                            # unknowable from the log — fall back to the
-                            # table-count path for this admission
-                            legacy = True
-                            break
-                        if rec.get("build_id") == build_id:
-                            committed += int(rec.get("n_appended", 0))
-                if legacy:
-                    # index or markers predate commit-log accounting:
-                    # the r9 table-scan path, correct but O(index files).
-                    # Loud (r10 verdict wrong #2): without the warning a
-                    # long-lived stream silently pays this on EVERY
-                    # batch forever; the backfill upgrades it once.
-                    import warnings
-
-                    warnings.warn(
-                        f"IVF ingest batch {batch_id} at {index_path}: "
-                        "commit-log admission unavailable (pre-r10 index "
-                        "or unreadable marker) — falling back to the "
-                        "O(index-files) table-count path for this and "
-                        "every future batch. Run "
-                        "ivf_markers_backfill(spark, index_path, log_dir) "
-                        "once to upgrade to marker-only admissions.",
-                        RuntimeWarning,
-                        stacklevel=2,
-                    )
-                    prior = glob.glob(
-                        os.path.join(
-                            vectors, "__cid__=*", f"ivfb_{token}.parquet"
-                        )
-                    )
-                    n_prior = (
-                        spark.read.parquet(*prior).count() if prior else 0
-                    )
-                    current = spark.read.parquet(vectors).count()
-                    committed = current - n_prior - rows_at_build
-                appended_after = committed + n_rows
-                if rows_at_build and appended_after > max_appended_frac * rows_at_build:
-                    raise ValueError(
-                        f"IVF streaming ingest at batch {batch_id}: appending "
-                        f"{n_rows} rows would put {appended_after} appended "
-                        f"rows over the recluster budget "
-                        f"({max_appended_frac:.0%} of {rows_at_build} built "
-                        "rows); appended vectors are quantized by STALE "
-                        "centroids. Rebuild with build_ivf_index(..., "
-                        "rebuild=True) and restart the stream, or raise "
-                        "max_appended_frac deliberately."
-                    )
-                cents = cents_memo.get(build_id) if build_id else None
+                cents = cents_memo.get(build_id)
                 if cents is None:
                     cents = [
                         (int(r[0]), [float(x) for x in r[1]])
@@ -1230,9 +1186,8 @@ def ivf_ingest_handler(
                             os.path.join(index_path, "centroids")
                         ).collect()
                     ]
-                    if build_id:
-                        cents_memo.clear()  # one build live at a time
-                        cents_memo[build_id] = cents
+                    cents_memo.clear()  # one build live at a time
+                    cents_memo[build_id] = cents
                 # Width for the assign kernel derived from the batch's
                 # OWN volume (n_rows × vector bytes / 64 KB-per-task,
                 # the session._KERNEL_BYTES_PER_TASK budget), capped at
@@ -1328,9 +1283,7 @@ def ivf_ingest_handler(
             # build it was appended under, so later batches enforce the
             # recluster budget from the marker sum without scanning the
             # standing vectors table
-            json.dump(
-                {"n_appended": n_rows, "build_id": meta.get("build_id")}, fh
-            )
+            json.dump({"n_appended": n_rows, "build_id": build_id}, fh)
         os.replace(tmp, marker)
         # marker durable -> this batch's files may now be compacted
         try:
@@ -1339,139 +1292,6 @@ def ivf_ingest_handler(
             pass
 
     return handle
-
-
-def ivf_markers_backfill(
-    spark: SparkSession, index_path: str, log_dir: str
-) -> dict:
-    """One-shot upgrade of a legacy IVF ingest log to commit-log
-    admissions (r10 verdict missing #2): a pre-r10 index (no
-    ``build_id`` in its meta) or a single unreadable/pre-r10 "ok"
-    commit marker flips ivf_ingest_handler's budget admission to the
-    O(index-files) table-count path on EVERY subsequent batch. This
-    pays that table count exactly ONCE more, then the stream runs on
-    marker-only admissions:
-
-    - a meta without ``build_id`` gets one stamped in (atomic
-      tmp+replace of the index marker);
-    - every unreadable marker is rewritten in place as
-      ``{"n_appended": 0, "build_id": <current>, "backfilled": true}``
-      — commit EXISTENCE (what the exactly-once short-circuit checks)
-      is preserved, and the rows those batches appended are carried by
-      the synthetic marker below;
-    - one synthetic ``backfill`` marker records the residual
-      ``current_count - rows_at_build - sum(readable markers for the
-      current build)``, so the marker sum equals the true appended
-      delta again. The name cannot collide with a batch marker (those
-      are stringified integers), and re-running the backfill is
-      idempotent: the synthetic marker is excluded from the residual
-      computation and rewritten whole.
-
-    Run it with the stream STOPPED — like compaction, this is a
-    single-operator administrative action with no cross-process lock,
-    and like compaction it REFUSES while _ingest_pending sentinels
-    exist (an uncommitted batch's rows would otherwise be counted in
-    the synthetic marker AND again at redelivery). Returns a report
-    dict."""
-    import json
-    import uuid
-
-    from mfdb_hafro_etl_spark.operators.similarity import _ivf_read_marker
-
-    # MUTUAL EXCLUSION with in-flight batches (mirrors
-    # ivf_index_compact, r11 ADVICE low): a crashed batch that renamed
-    # its files but never committed leaves a sentinel; its rows are in
-    # vectors/ with no marker, so the residual below would fold them
-    # into the synthetic marker AND the batch's redelivery would write
-    # its own marker for the same rows — double-counting the budget
-    # sum. Refuse until the stream finishes (or the sentinel is
-    # removed after verifying the batch's marker exists).
-    pending_dir = os.path.join(index_path, "_ingest_pending")
-    if os.path.isdir(pending_dir):
-        pending = sorted(os.listdir(pending_dir))
-        if pending:
-            raise RuntimeError(
-                f"IVF index at {index_path} has in-flight streaming "
-                f"batches {pending} (sentinels under _ingest_pending): "
-                "their renamed-but-uncommitted rows would be folded into "
-                "the synthetic backfill marker and then double-counted "
-                "when the batch redelivers. Let the stream finish (or "
-                "restart it so the batches commit), then backfill."
-            )
-
-    meta = _ivf_read_marker(index_path)  # loud on a torn index
-    build_id = meta.get("build_id")
-    stamped = False
-    if build_id is None:
-        build_id = uuid.uuid4().hex
-        meta["build_id"] = build_id
-        marker = os.path.join(index_path, "_INDEX_OK")
-        tmp = marker + ".tmp"
-        with open(tmp, "w") as fh:
-            json.dump(meta, fh)
-        os.replace(tmp, marker)
-        stamped = True
-    commits_dir = os.path.join(log_dir, "_commits")
-    os.makedirs(commits_dir, exist_ok=True)
-    n_rewritten = 0
-    committed = 0
-    for mname in sorted(os.listdir(commits_dir)):
-        if mname.endswith(".tmp") or mname == "backfill":
-            continue
-        mpath = os.path.join(commits_dir, mname)
-        try:
-            with open(mpath) as fh:
-                rec = json.loads(fh.read())
-            # valid-but-non-dict JSON (e.g. a bare `5`) is as legacy as
-            # unparseable bytes: `"n_appended" in 5` would raise
-            # TypeError (r11 ADVICE low) — rewrite it like the rest
-            if not isinstance(rec, dict) or "n_appended" not in rec:
-                rec = None
-        except (OSError, ValueError):
-            rec = None
-        if rec is None:
-            tmp = mpath + ".tmp"
-            with open(tmp, "w") as fh:
-                json.dump(
-                    {"n_appended": 0, "build_id": build_id, "backfilled": True},
-                    fh,
-                )
-            os.replace(tmp, mpath)
-            n_rewritten += 1
-        elif rec.get("build_id") == build_id:
-            committed += int(rec.get("n_appended", 0))
-    rows_at_build = int(meta.get("rows_at_build", 0))
-    current = spark.read.parquet(os.path.join(index_path, "vectors")).count()
-    delta = current - rows_at_build - committed
-    if delta < 0:
-        import warnings
-
-        warnings.warn(
-            f"ivf_markers_backfill at {index_path}: readable markers for "
-            f"build {build_id} already account for {committed} appended "
-            f"rows but the table holds only {current - rows_at_build} "
-            "beyond the build — vectors files were removed outside the "
-            "ingest path. Clamping the synthetic marker to 0; audit the "
-            "index.",
-            RuntimeWarning,
-            stacklevel=2,
-        )
-        delta = 0
-    synth = os.path.join(commits_dir, "backfill")
-    tmp = synth + ".tmp"
-    with open(tmp, "w") as fh:
-        json.dump(
-            {"n_appended": int(delta), "build_id": build_id, "backfilled": True},
-            fh,
-        )
-    os.replace(tmp, synth)
-    return {
-        "build_id": build_id,
-        "stamped_build_id": stamped,
-        "n_rewritten": n_rewritten,
-        "backfilled_rows": int(delta),
-        "committed_in_log": committed,
-    }
 
 
 def stream_ivf_ingest(
@@ -1504,9 +1324,9 @@ def stream_ivf_ingest(
 
     Scale shape: each micro-batch costs one assignment map over its
     own rows (Arrow matmul vs dimension-sized broadcast centroids),
-    one increment-sized shuffle into cells, and two footer-count
-    metadata jobs for the budget — nothing rescans the standing
-    vectors. One in-flight ingest per index (the rename discipline is
+    one increment-sized shuffle into cells, and one aggregate over the
+    batch for admission (the budget comes from the commit markers) —
+    nothing rescans the standing vectors. One in-flight ingest per index (the rename discipline is
     per-batch-serial by the stream's own semantics)."""
     spark = stream_df.sparkSession
     with _scoped_state_partitions(spark, state_partitions):

@@ -1439,6 +1439,27 @@ def test_ivf_index_append_guards(spark, tmp_path):
         sim.ivf_index_append(small, path)
 
 
+@pytest.mark.parametrize(
+    "bad_vec, error",
+    [(None, "embedding is NULL"), ([0.5] * 5, "holds 8-dim vectors")],
+    ids=["null", "dims"],
+)
+def test_ivf_index_append_checks_every_row(spark, tmp_path, bad_vec, error):
+    """A NULL or wrong-length vector AFTER a valid first row refuses with
+    the NULL / dims error before anything is written — a first-row probe
+    passed it through to an opaque failure inside the assignment kernel."""
+    path = str(tmp_path / "idx")
+    sim.build_ivf_index(_ivf_fixture(spark, 20), path, n_centroids=4, kmeans_iters=0)
+    vec = os.path.join(path, "vectors")
+    before = spark.read.parquet(vec).count()
+    good = [r["embedding"] for r in _ivf_fixture(spark, 3, id0=900).collect()]
+    rows = [(900 + i, v) for i, v in enumerate(good)] + [(903, bad_vec)]
+    batch = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
+    with pytest.raises(ValueError, match=error):
+        sim.ivf_index_append(batch, path, max_appended_frac=1.0)
+    assert spark.read.parquet(vec).count() == before
+
+
 def test_ivf_index_compact_invariant(spark, tmp_path):
     """Compaction folds per-append files cell-locally without
     changing a row, and probes answer identically after."""

@@ -864,9 +864,9 @@ def test_ivf_ingest_budget_from_commit_log(spark, tmp_path, monkeypatch):
     file-access instrumentation: a spy on DataFrameReader.parquet
     records every read path during handler runs and the vectors root
     must not appear. Also pins: marker-sum == table-count delta after
-    N batches, no double-count under crash-window redelivery, budget
-    reset across a rebuild (stale build_id markers stop counting),
-    and the legacy-marker fallback."""
+    N batches, no double-count under crash-window redelivery, and
+    budget reset across a rebuild (stale build_id markers stop
+    counting)."""
     import json
 
     import pytest
@@ -938,164 +938,63 @@ def test_ivf_ingest_budget_from_commit_log(spark, tmp_path, monkeypatch):
     assert _ivf_read_marker(path)["build_id"] != build_id
     handle(_emb_df(spark, range(16, 24)), 2)
     assert len(_vec_rows(spark, path)) == 64  # 56 rebuilt + 8
-    # legacy fallback: a pre-r10 "ok" marker makes the sum unknowable
-    # from the log — the handler must fall back to the table-count
-    # path (reads vectors once), WARN about it (r11), and still
-    # enforce correctly
-    with open(os.path.join(logd, "_commits", "2"), "w") as fh:
-        fh.write("ok")
-    monkeypatch.setattr(DataFrameReader, "parquet", spy)
-    seen.clear()
-    with pytest.warns(RuntimeWarning, match="commit-log admission unavailable"):
-        handle(_emb_df(spark, range(24, 28)), 3)
-    assert vectors_root in seen  # the documented legacy cost
-    monkeypatch.setattr(DataFrameReader, "parquet", orig)
-    assert len(_vec_rows(spark, path)) == 68
 
 
-def test_ivf_markers_backfill_upgrades_legacy_log(spark, tmp_path, monkeypatch):
-    """r10 verdict missing #2 / wrong #2: one unreadable marker used to
-    flip EVERY future admission to the O(index-files) table-count path,
-    silently. Pinned here: (1) the legacy path now WARNS when it
-    engages; (2) ivf_markers_backfill pays the table count exactly once
-    — rewriting unreadable markers in place (commit existence
-    preserved) and recording the residual in a synthetic build-tagged
-    marker whose sum restores marker-only admission; (3) the next
-    batch admits without reading the vectors table and without the
-    legacy warning; (4) re-running the backfill is idempotent."""
+def test_ivf_ingest_handler_refuses_malformed_state(spark, tmp_path):
+    """An index meta without a build_id, or a commit marker that is not
+    a JSON object (unparseable ``ok``, bare ``5``), makes the commit-log
+    budget sum unknowable: the handler refuses with the rebuild
+    instruction — naming the offending file — and writes nothing under
+    vectors/."""
     import json
-    import warnings as _w
-
-    import pytest
-    from pyspark.sql.readwriter import DataFrameReader
-
-    from mfdb_hafro_etl_spark.operators.similarity import _ivf_read_marker
-    from mfdb_hafro_etl_spark.streaming.jobs import (
-        ivf_ingest_handler,
-        ivf_markers_backfill,
-    )
-
-    path = _build_ivf(spark, tmp_path)  # 40 built rows
-    logd = str(tmp_path / "log_bf")
-    vectors_root = os.path.join(path, "vectors")
-    handle = ivf_ingest_handler(path, logd, max_appended_frac=0.5)  # 20
-
-    handle(_emb_df(spark, range(0, 4)), 0)
-    handle(_emb_df(spark, range(4, 8)), 1)
-    # poison: batch 0's marker becomes a pre-r10 "ok" body
-    with open(os.path.join(logd, "_commits", "0"), "w") as fh:
-        fh.write("ok")
-    # legacy admission engages loudly and pays the table scan
-    seen: list[str] = []
-    orig = DataFrameReader.parquet
-
-    def spy(self, *paths, **kw):
-        seen.extend(paths)
-        return orig(self, *paths, **kw)
-
-    monkeypatch.setattr(DataFrameReader, "parquet", spy)
-    with pytest.warns(RuntimeWarning, match="commit-log admission unavailable"):
-        handle(_emb_df(spark, range(8, 12)), 2)
-    assert vectors_root in seen
-    monkeypatch.setattr(DataFrameReader, "parquet", orig)
-    assert len(_vec_rows(spark, path)) == 52  # 40 + 4 + 4 + 4
-
-    # the one-shot upgrade: one table count, markers readable after
-    report = ivf_markers_backfill(spark, path, logd)
-    build_id = _ivf_read_marker(path)["build_id"]
-    assert report["build_id"] == build_id
-    assert report["n_rewritten"] == 1  # the "ok" marker
-    # batches 1 and 2 are readable (4 + 4); batch 0's rows ride the
-    # synthetic marker
-    assert report["committed_in_log"] == 8
-    assert report["backfilled_rows"] == 4
-    rec0 = json.loads(open(os.path.join(logd, "_commits", "0")).read())
-    assert rec0 == {"n_appended": 0, "build_id": build_id, "backfilled": True}
-    synth = json.loads(open(os.path.join(logd, "_commits", "backfill")).read())
-    assert synth["n_appended"] == 4 and synth["build_id"] == build_id
-    # marker sum over the current build equals the true appended delta
-    total = sum(
-        json.loads(open(os.path.join(logd, "_commits", m)).read())["n_appended"]
-        for m in os.listdir(os.path.join(logd, "_commits"))
-        if not m.endswith(".tmp")
-    )
-    assert total == len(_vec_rows(spark, path)) - 40
-
-    # marker-only admission from here: no vectors read, no warning
-    seen.clear()
-    monkeypatch.setattr(DataFrameReader, "parquet", spy)
-    with _w.catch_warnings(record=True) as caught:
-        _w.simplefilter("always")
-        handle(_emb_df(spark, range(12, 16)), 3)
-    assert not [
-        w for w in caught if "commit-log admission unavailable" in str(w.message)
-    ]
-    assert vectors_root not in seen
-    monkeypatch.setattr(DataFrameReader, "parquet", orig)
-    assert len(_vec_rows(spark, path)) == 56
-    # budget still enforced from markers alone: 16 appended so far,
-    # 8 more would cross 0.5 * 40 = 20
-    monkeypatch.setattr(DataFrameReader, "parquet", spy)
-    seen.clear()
-    with pytest.raises(ValueError, match="recluster budget"):
-        handle(_emb_df(spark, range(16, 24)), 4)
-    assert vectors_root not in seen
-    monkeypatch.setattr(DataFrameReader, "parquet", orig)
-
-    # idempotent: re-running the backfill leaves the sum invariant
-    report2 = ivf_markers_backfill(spark, path, logd)
-    assert report2["n_rewritten"] == 0
-    assert report2["committed_in_log"] == 12  # batches 1-3
-    assert report2["backfilled_rows"] == 4
-    total2 = sum(
-        json.loads(open(os.path.join(logd, "_commits", m)).read())["n_appended"]
-        for m in os.listdir(os.path.join(logd, "_commits"))
-        if not m.endswith(".tmp")
-    )
-    assert total2 == 16
-
-
-def test_ivf_markers_backfill_refuses_pending_and_nondict_marker(
-    spark, tmp_path
-):
-    """r11 ADVICE low: (1) a renamed-but-uncommitted batch (sentinel
-    present, marker absent) must make the backfill REFUSE — folding
-    those rows into the synthetic marker would double-count them when
-    the batch redelivers its own marker; (2) a marker holding valid
-    non-dict JSON (e.g. `5`) is legacy like unparseable bytes and must
-    be rewritten, not raise TypeError."""
-    import json
+    import re
 
     import pytest
 
-    from mfdb_hafro_etl_spark.streaming.jobs import (
-        ivf_ingest_handler,
-        ivf_markers_backfill,
-    )
+    from mfdb_hafro_etl_spark.streaming.jobs import ivf_ingest_handler
 
     path = _build_ivf(spark, tmp_path)
-    logd = str(tmp_path / "log_bf2")
+    vectors_root = os.path.join(path, "vectors")
+    fix = re.escape(
+        "rebuild the index with build_ivf_index(..., rebuild=True) and "
+        "restart the stream on a fresh log/checkpoint directory"
+    )
+    logd = str(tmp_path / "log_strict")
     handle = ivf_ingest_handler(path, logd, max_appended_frac=1.0)
     handle(_emb_df(spark, range(0, 4)), 0)
-    # poison batch 0's marker with valid non-dict JSON
-    with open(os.path.join(logd, "_commits", "0"), "w") as fh:
-        fh.write("5")
-    # a crashed batch's sentinel: backfill must refuse, untouched log
-    pending_dir = os.path.join(path, "_ingest_pending")
-    os.makedirs(pending_dir, exist_ok=True)
-    with open(os.path.join(pending_dir, "b7"), "w") as fh:
-        fh.write("{}")
-    with pytest.raises(RuntimeError, match="in-flight streaming batches"):
-        ivf_markers_backfill(spark, path, logd)
-    assert open(os.path.join(logd, "_commits", "0")).read() == "5"
-    os.remove(os.path.join(pending_dir, "b7"))
-    # sentinel gone: the non-dict marker is rewritten like any legacy one
-    report = ivf_markers_backfill(spark, path, logd)
-    assert report["n_rewritten"] == 1
-    rec0 = json.loads(open(os.path.join(logd, "_commits", "0")).read())
-    assert rec0["n_appended"] == 0 and rec0["backfilled"] is True
-    synth = json.loads(open(os.path.join(logd, "_commits", "backfill")).read())
-    assert synth["n_appended"] == 4  # batch 0's rows ride the synthetic
+
+    def tree():
+        return {
+            os.path.join(d, n)
+            for d, dirs, fs in os.walk(vectors_root)
+            for n in dirs + fs
+        }
+
+    files = tree()
+
+    marker0 = os.path.join(logd, "_commits", "0")
+    for body in ("ok", "5"):
+        with open(marker0, "w") as fh:
+            fh.write(body)
+        with pytest.raises(ValueError, match=fix) as err:
+            handle(_emb_df(spark, range(4, 8)), 1)
+        assert marker0 in str(err.value)
+        assert "not a JSON object" in str(err.value)
+        assert tree() == files
+        assert not os.path.exists(os.path.join(logd, "_commits", "1"))
+
+    meta_path = os.path.join(path, "_INDEX_OK")
+    with open(meta_path) as fh:
+        meta = json.load(fh)
+    del meta["build_id"]
+    with open(meta_path, "w") as fh:
+        json.dump(meta, fh)
+    fresh = ivf_ingest_handler(path, str(tmp_path / "log_fresh"))
+    with pytest.raises(ValueError, match=fix) as err:
+        fresh(_emb_df(spark, range(4, 8)), 0)
+    assert meta_path in str(err.value)
+    assert "no build_id" in str(err.value)
+    assert tree() == files
 
 
 def test_ivf_compact_refuses_mid_crash_window(spark, tmp_path):
